@@ -12,10 +12,10 @@ Design notes for the 10^10-URL scale point:
 - sitemap XML bodies are parsed on executors (``mapInPandas``), one
   task per sitemap — a 50k-URL sitemap is one Arrow batch, thousands
   of sitemaps parallelize across the cluster.
-- the robots rule set is a *small* per-host table → broadcast to a
-  vectorized pandas UDF with a per-executor parsed-group cache; the
-  filter is the anti-join semantics of resources.go:162-165 without
-  shuffling the frontier.
+- the robots rule set is a *small* per-host table → shipped in the
+  parse task's closure and evaluated there (``_robots_allowed``, with
+  a parsed-group cache); the filter is the anti-join semantics of
+  resources.go:162-165 without shuffling the frontier.
 - ``position`` pins Gleaner's implicit sitemap document order so the
   politeness scheduler can reproduce the reference crawl order.
 - ``url_hash`` (xxhash64 for partition bucketing + sha1 hex for
@@ -136,23 +136,20 @@ def sitemap_entries_df(spark: SparkSession, docs: list[tuple[str, str, int, str]
     return doc_df.mapInPandas(parse, SITEMAP_ENTRY_SCHEMA)
 
 
-def _robots_filter_udf(robots_by_host: dict[str, str]):
-    """Vectorized robots evaluator. Broadcast-sized rule table; parsed
-    groups cached per executor (ldproc-style context cache,
-    SURVEY §4)."""
-    _cache: dict[str, rb.Group | None] = {}
+def _robots_allowed(robots_by_host: dict[str, str] | None):
+    """The robots evaluator (S11) of the fused frontier parse and the
+    streaming attribution pass: ``allowed(url, host)``, parsed groups
+    cached per task (ldproc-style context cache, SURVEY §4)."""
+    robots_by_host = robots_by_host or {}
+    groups: dict[str, rb.Group | None] = {}
 
-    @F.pandas_udf(T.BooleanType())
-    def allowed(urls: pd.Series, hosts: pd.Series) -> pd.Series:
-        out = []
-        for url, host in zip(urls, hosts):
-            grp = _cache.get(host, False)
-            if grp is False:
-                body = robots_by_host.get(host)
-                grp = rb.parse_robots_txt(body).find_group(EARTHCUBE_AGENT) if body else None
-                _cache[host] = grp
-            out.append(True if grp is None else grp.test(url))
-        return pd.Series(out)
+    def allowed(url: str, host: str | None) -> bool:
+        grp = groups.get(host, False)
+        if grp is False:
+            body = robots_by_host.get(host)
+            grp = rb.parse_robots_txt(body).find_group(EARTHCUBE_AGENT) if body else None
+            groups[host] = grp
+        return True if grp is None else grp.test(url)
 
     return allowed
 
@@ -203,7 +200,7 @@ def _frontier_entries_df(spark: SparkSession, docs: list[tuple[str, str, int, st
     within-doc survivor rank, all in the ONE per-sitemap parse task.
 
     The unfused operators (``sitemap_entries_df`` + the S10 column
-    expressions + ``_robots_filter_udf``) stay as the unit-testable
+    expressions + a per-row robots UDF) stay as the unit-testable
     building blocks and oracle contracts; the frontier build uses this
     fused stage because each extra Python stage is a full Arrow round
     trip of the frontier and the plain per-source rank window was an
@@ -212,18 +209,7 @@ def _frontier_entries_df(spark: SparkSession, docs: list[tuple[str, str, int, st
     local rank and the survivor count are free; the global position is
     the rank plus a cumulative per-doc offset from a tiny broadcast
     table. Row-identical to the unfused chain (pinned by test)."""
-    robots_by_host = robots_bodies or {}
-    _groups: dict[str, rb.Group | None] = {}
-
-    def _allowed(url: str, host: str | None) -> bool:
-        if not robots_by_host:
-            return True
-        grp = _groups.get(host, False)
-        if grp is False:
-            body = robots_by_host.get(host)
-            grp = rb.parse_robots_txt(body).find_group(EARTHCUBE_AGENT) if body else None
-            _groups[host] = grp
-        return True if grp is None else grp.test(url)
+    _allowed = _robots_allowed(robots_bodies)
 
     # the XML bodies ship as ONE broadcast (torrent, cached per
     # executor) instead of riding every task of every branch — the

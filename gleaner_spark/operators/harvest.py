@@ -12,8 +12,9 @@ becomes four declarative stages:
    (S30 headless semantics).
 3. **process** (S17-S26): vectorized fixup chain + SHA-1/SHA-256 +
    identifier dispatch, one Arrow batch at a time.
-4. **dedup + sinks** (S27-S31): Bloom-prefiltered left-anti join
-   against the seen set on (source_name, unique_id) — the reference
+4. **dedup + sinks** (S27-S31): left-anti join against the seen set
+   on (source_name, unique_id), Bloom-prefiltered only when a
+   checkpointed seen-set sketch is at hand — the reference
    names objects ``summoned/<site>/<identifier.UniqueId>.jsonld`` and
    its StatObject idempotency check therefore keys on UniqueId, not
    the content hash (jsonutils.go:355-357,384-386); for ``jsonsha``
@@ -51,6 +52,9 @@ EXTRACTED_SCHEMA = T.StructType(
         T.StructField("via_fallback", T.BooleanType()),
     ]
 )
+
+
+BROADCAST_FRONTIER_MAX_ROWS = 500_000  # largest frontier a fetch join broadcasts
 
 
 def fetch_pages(frontier: DataFrame, pages: DataFrame,
@@ -390,10 +394,10 @@ def _first_per_key(df: DataFrame, key: str,
 
 def dedup_new_documents(spark: SparkSession, processed: DataFrame,
                         url_seen: DataFrame | None,
-                        expected_seen: int = 1_000_000,
                         sketch: BloomSketch | None = None,
                         cluster_files: int = 4) -> DataFrame:
-    """S27: Bloom-prefiltered anti-join on (source_name, unique_id).
+    """S27: left-anti join against the seen set on (source_name,
+    unique_id), Bloom-prefiltered when a checkpointed sketch is given.
 
     The identity key is ``identifier.UniqueId`` — the reference's
     object name is ``summoned/<site>/<UniqueId>.jsonld`` and the
@@ -404,11 +408,12 @@ def dedup_new_documents(spark: SparkSession, processed: DataFrame,
     and changed content under the same identifier is NOT re-stored.
     The content ``sha`` stays as an ordinary column.
 
-    Bloom negatives are definitely new and skip the shuffle; only
-    candidates anti-join the authoritative seen table. Pass a
-    ``sketch`` restored from a lake checkpoint to skip the
-    build-from-table scan entirely (the 10^10-frontier path — the
-    sketch is maintained incrementally across runs).
+    With a ``sketch`` restored from a lake checkpoint (the
+    10^10-frontier path — the sketch is maintained incrementally
+    across runs), Bloom negatives are definitely new and skip the
+    shuffle; only candidates anti-join the authoritative seen table.
+    Without one, rows go straight to the anti-join: building a sketch
+    here would scan the whole seen set anyway.
 
     The winner-per-key exchange is fused with the documents sink's
     source_name clustering (see ``_first_per_key``): output rows
@@ -418,24 +423,22 @@ def dedup_new_documents(spark: SparkSession, processed: DataFrame,
     processed = processed.withColumn(
         "seen_key", F.concat_ws("/", "source_name", "unique_id")
     )
-    if url_seen is None:
-        return _first_per_key(
-            processed, "seen_key",
-            fuse_sink_cluster=True, cluster_files=cluster_files,
-        ).drop("seen_key")
-    seen_keys = url_seen.select(
-        F.concat_ws("/", "source_name", "unique_id").alias("seen_key")
-    )
-    if sketch is None:
-        sketch = build_bloom(seen_keys, "seen_key", expected=expected_seen)
-    tagged = with_might_contain(processed, "seen_key", sketch, "maybe_seen")
-    definitely_new = tagged.filter(~F.col("maybe_seen"))
-    candidates = tagged.filter(F.col("maybe_seen"))
-    verified_new = candidates.join(seen_keys, "seen_key", "left_anti")
+    new = processed
+    if url_seen is not None:
+        seen_keys = url_seen.select(
+            F.concat_ws("/", "source_name", "unique_id").alias("seen_key")
+        )
+        if sketch is None:
+            new = processed.join(seen_keys, "seen_key", "left_anti")
+        else:
+            tagged = with_might_contain(processed, "seen_key", sketch, "maybe_seen")
+            definitely_new = tagged.filter(~F.col("maybe_seen"))
+            candidates = tagged.filter(F.col("maybe_seen"))
+            verified_new = candidates.join(seen_keys, "seen_key", "left_anti")
+            new = definitely_new.unionByName(verified_new).drop("maybe_seen")
     return _first_per_key(
-        definitely_new.unionByName(verified_new), "seen_key",
-        fuse_sink_cluster=True, cluster_files=cluster_files,
-    ).drop("seen_key", "maybe_seen")
+        new, "seen_key", fuse_sink_cluster=True, cluster_files=cluster_files,
+    ).drop("seen_key")
 
 
 SKETCH_TABLE = "url_seen_sketch"

@@ -56,7 +56,7 @@ def run_harvest(
     rude: bool = False,
     global_strict: bool = False,
     resume: bool = False,
-    broadcast_frontier_max_rows: int = 500_000,
+    broadcast_frontier_max_rows: int = hv.BROADCAST_FRONTIER_MAX_ROWS,
     context_maps: dict[str, dict] | None = None,
     fetch_mode: str = "pages",
     live_url_rewrite=None,

@@ -10,33 +10,39 @@ incrementally with ``Trigger.AvailableNow`` semantics.
 The micro-batch body is a faithful twin of ``run_harvest`` phase 2 —
 it reuses the SAME fused extract/process kernel, the same dedup
 anti-join, the same documents/prov table builders, and the same
-robots evaluator, so the streaming lake and a batch harvest of the
-identical pages are table-equal (documents and prov; pinned by the
-differential suite in tests/test_streaming_differential.py). The
-mapping from a page drop to phase-2 inputs:
+robots evaluator as the fused frontier (``_robots_allowed``), so the
+streaming lake and a batch harvest of the identical pages are
+table-equal (documents and prov; pinned by the differential suite in
+tests/test_streaming_differential.py). The mapping from a page drop
+to phase-2 inputs, all on the narrow keys (``fetch_microbatch``):
 
 - source attribution: the frontier derives it from sitemap ownership;
   a page drop has no sitemap, so attribution is the host → source
-  domain match (a broadcast join; pages outside every source's domain
-  are dropped, the analog of not being sitemap-listed).
-- robots: the same vectorized evaluator as the frontier anti-filter.
+  domain match (pages outside every source's domain are dropped, the
+  analog of not being sitemap-listed).
+- robots: the frontier's evaluator, in the attribution's Python pass.
 - crawl order: ``position`` is the row_number per source over
   ``warc_ts`` (the capture timestamp IS the crawl order in a
   WARC-derived stream) so the shared-identifier tie-break picks the
   same winner as the batch pipeline; across micro-batches the earlier
   batch wins by the lake seen-set, which matches too.
 
-100-TB shape: each micro-batch shuffles only its own pages; the dedup
-anti-join prunes via the lake seen projection (columnar, two columns
-of the documents table). The per-trigger seen-table scan is the
-streaming price for exact dedup — the batch pipeline's checkpointed
-bloom sketch covers the bulk-backfill path, and a valid checkpoint is
-picked up here too (metadata-only probe per batch).
+100-TB shape: each micro-batch shuffles only its own narrow keys and
+documents, never the page bodies; the dedup anti-join prunes via the
+lake seen projection (columnar, two columns of the documents table).
+Anti-joining the seen table in every batch is the streaming price
+for exact dedup — a valid checkpoint of the batch pipeline's bloom
+sketch is picked up here too (metadata-only probe per batch) and
+prefilters it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import hashlib
+import os
+import uuid
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.lake import Lake
@@ -67,6 +73,98 @@ def _ordered_positions(pages):
     return ranked.withColumn(
         "position", (F.col("position") + F.lit(1)).cast("long")
     ).drop("_blk")
+
+
+def _attributed_keys(pages: DataFrame, sources: list[Source],
+                     robots_by_host: dict[str, str] | None) -> DataFrame:
+    """Distinct (source_name, url, warc_ts) of a page drop, from ONE
+    Arrow pass over the narrow keys: the host key (``_host_of``, which
+    never throws — ``F.parse_url`` raises [INVALID_URL] on the
+    URI-invalid URLs real WARC frontiers hold, killing the query), the
+    domain attribution (one row per owning source) and robots."""
+    import pyarrow as pa
+
+    from ..operators.frontier import _host_of, _robots_allowed
+
+    owners: dict[str, list[str]] = {}
+    for s in sources:
+        if s.active and s.domain:
+            owners.setdefault(s.domain, []).append(s.name)
+
+    def attribute(batches):
+        allowed = _robots_allowed(robots_by_host)
+        for b in batches:
+            take, names = [], []
+            for i, url in enumerate(b.column("url").to_pylist()):
+                host = _host_of(url) if url else None
+                owned = owners.get(host)
+                if owned and allowed(url, host):
+                    take += [i] * len(owned)
+                    names += owned
+            # warc_ts stays an Arrow column: exact in any session time zone
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(names, pa.string()), b.column("url").take(take),
+                 b.column("warc_ts").take(take)],
+                names=["source_name", "url", "warc_ts"],
+            )
+
+    return (
+        pages.select("url", "warc_ts")
+        .mapInArrow(attribute, "source_name string, url string, warc_ts timestamp")
+        .dropDuplicates(["source_name", "url", "warc_ts"])
+    )
+
+
+def fetch_microbatch(pages: DataFrame, sources: list[Source],
+                     robots_by_host: dict[str, str] | None
+                     ) -> tuple[DataFrame, int]:
+    """A page drop → (fetched, n): the fused kernel's input
+    (source_name, url, position, html, text, content_type), and the
+    number of attributed keys.
+
+    The keys (``_attributed_keys``) are materialized once, as a local
+    checkpoint whose row count rides the same job through an
+    Observation, and ranked alone. The bodies then join a broadcast of
+    the ranked keys on (url, warc_ts), as in ``fetch_pages``, so
+    ``html`` never crosses an exchange; the keys being distinct keeps
+    that join from fanning out. The checkpoint's blocks are freed by
+    Spark's ContextCleaner once the frames are dropped."""
+    from ..operators.harvest import BROADCAST_FRONTIER_MAX_ROWS
+
+    obs = Observation()
+    keys = _attributed_keys(pages, sources, robots_by_host).observe(
+        obs, F.count(F.lit(1)).alias("n")
+    ).localCheckpoint()
+    n = obs.get["n"]
+    ranked = _ordered_positions(keys)
+    bodies = pages.select(
+        F.col("url").alias("page_url"), F.col("warc_ts").alias("page_ts"),
+        "html", "text", "content_type",
+    )
+    on = (ranked["url"] == bodies["page_url"]) & ranked["warc_ts"].eqNullSafe(
+        bodies["page_ts"]
+    )
+    side = (F.broadcast(ranked) if n <= BROADCAST_FRONTIER_MAX_ROWS
+            else ranked.hint("shuffle_hash"))
+    fetched = side.join(bodies, on, "inner").select(
+        "source_name", "url", "position", "html", "text", "content_type"
+    )
+    return fetched, n
+
+
+def _checkpoint_lineage(checkpoint_dir: str) -> str:
+    """A uuid naming the checkpoint's lineage, written into the (local)
+    checkpoint directory on first use. A checkpoint wiped and recreated
+    at the same path restarts batch ids with new content, so ids built
+    from batch_id are scoped to this, not to the path."""
+    path = os.path.join(checkpoint_dir, "_lineage")
+    if not os.path.exists(path):
+        os.makedirs(checkpoint_dir, exist_ok=True)
+        with open(path + ".tmp", "w") as f:
+            f.write(uuid.uuid4().hex)
+        os.replace(path + ".tmp", path)  # atomic: never a torn marker
+    with open(path) as f:
+        return f.read()
 
 
 def incremental_harvest(
@@ -100,7 +198,6 @@ def incremental_harvest(
     streaming lake stays table-equal to a batch harvest (the
     differential suite's pin)."""
     from ..operators import harvest as hv
-    from ..operators.frontier import _robots_filter_udf
     from ..sources.corpus import PAGES_SCHEMA
 
     stream = (
@@ -109,23 +206,9 @@ def incremental_harvest(
         .parquet(pages_stream_dir)
     )
 
-    src_rows = [(s.domain, s.name) for s in sources if s.active and s.domain]
     hw = {s.name: s.headless_wait for s in sources}
 
-    # the SAME host keying as the fused frontier (_host_of): tolerant
-    # of hosts java.net.URI rejects, and never throws — F.parse_url
-    # raises [INVALID_URL] on URI-invalid page URLs ('{', '|', spaces
-    # all occur in real WARC frontiers), which would kill the whole
-    # micro-batch and the streaming query with it
-    @F.pandas_udf("string")
-    def _host_udf(urls):
-        from ..operators.frontier import _host_of
-
-        return urls.map(lambda u: _host_of(u) if u else None)
-
     def process_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
         sp = batch_df.sparkSession
         if maintain_index:
             from ..operators.urlindex import build_capture_index
@@ -136,16 +219,14 @@ def incremental_harvest(
             # capture-index append would double those keys' n_captures
             # in every recrawl estimate. The manifest records run_id,
             # so a replayed batch whose index snapshot already
-            # published is a no-op. The id is CHECKPOINT-scoped, not
-            # bare batch_id: within one checkpoint lineage a replayed
+            # published is a no-op. The id is LINEAGE-scoped, not bare
+            # batch_id: within one checkpoint lineage a replayed
             # batch_id carries identical content (Spark's contract),
-            # but a FRESH checkpoint over the same lake restarts batch
-            # numbering with different content — a bare-id guard would
-            # silently drop those captures.
-            import hashlib
-
+            # but a fresh checkpoint — even one recreated at the same
+            # path — restarts batch numbering with different content,
+            # and a bare-id guard would silently drop those captures.
             ckpt_h = hashlib.sha1(
-                checkpoint_dir.encode("utf-8")
+                _checkpoint_lineage(checkpoint_dir).encode("utf-8")
             ).hexdigest()[:8]
             idx_table = lake.table("url_index")
             idx_run = f"stream-{ckpt_h}-{batch_id}"
@@ -160,16 +241,11 @@ def incremental_harvest(
                     build_capture_index(batch_df).coalesce(2),
                     run_id=idx_run,
                 )
-        pages = batch_df.withColumn("host", _host_udf(F.col("url")))
-        src_df = sp.createDataFrame(src_rows, "host string, source_name string")
-        pages = pages.join(F.broadcast(src_df), "host", "inner")
-        if not rude and robots_bodies:
-            allowed = _robots_filter_udf(robots_bodies)
-            pages = pages.filter(allowed(F.col("url"), F.col("host")))
-        fetched = _ordered_positions(pages).select(
-            "source_name", "url", "position", "html", "text", "content_type"
+        fetched, n = fetch_microbatch(
+            batch_df, sources, None if rude else robots_bodies
         )
-
+        if n == 0:
+            return
         processed = hv.extract_and_process(
             fetched, sources, hw, global_strict, context_maps=context_maps,
             emit_raw=False,

@@ -793,6 +793,144 @@ class TestStreaming:
         assert "not a url at all" not in stored
 
 
+def _plan_nodes(df):
+    """Every distinct physical node under ``df``'s executed plan,
+    descending through AQE wrappers, query stages and cached
+    relations (a persisted frame scanned twice counts once)."""
+    seen, out = set(), []
+
+    def walk(node):
+        if node.id() in seen:
+            return
+        seen.add(node.id())
+        out.append(node)
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif cls.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        elif cls == "InMemoryTableScanExec":
+            kids = [node.relation().cachedPlan()]
+        else:
+            ch = node.children()
+            kids = [ch.apply(i) for i in range(ch.size())]
+        for k in kids:
+            walk(k)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def _is_python_node(node) -> bool:
+    return node.getClass().getName().startswith(
+        "org.apache.spark.sql.execution.python.")
+
+
+def _output_names(node) -> set:
+    out = node.output()
+    return {out.apply(i).name() for i in range(out.size())}
+
+
+class TestStreamingPrelude:
+    """The micro-batch prelude (fetch_microbatch): attribution, robots
+    and the host key in ONE Python pass over the narrow keys; the
+    bodies join back without crossing an exchange."""
+
+    @staticmethod
+    def _drop(spark, path):
+        """One drop holding the cases a join could fan out on: a page
+        row duplicated on (url, warc_ts), a host two sources share, a
+        NULL warc_ts, a URI-invalid URL with a keyable host, plus an
+        unkeyable URL and a robots-disallowed one."""
+        import datetime as dt
+
+        from gleaner_spark.sources import corpus
+        from gleaner_spark.sources.config import Source
+
+        def page(i, url=None, ts=True):
+            html, text = corpus.html_for(i)
+            return (url or corpus.url_for(i),
+                    corpus._EPOCH + dt.timedelta(seconds=i) if ts else None,
+                    html.encode(), text, "en", corpus.content_type_for(i))
+
+        rows = [
+            page(0),                      # geo0: src0 AND srcX own it
+            page(1), page(1),             # duplicated (url, warc_ts)
+            page(2, ts=False),            # NULL warc_ts
+            page(8, url="https://geo3.example.org/items/a{b}"),
+            page(13, url="not a url at all"),
+            page(15, url="https://geo0.example.org/private/p"),
+        ]
+        spark.createDataFrame(rows, corpus.PAGES_SCHEMA).repartition(1) \
+            .write.mode("overwrite").parquet(path)
+        sources = corpus.build_sources() + [
+            Source(name="srcX", url=f"{corpus.HOSTS[0]}/other.xml",
+                   domain=corpus.HOSTS[0]),
+        ]
+        return spark.read.parquet(path), sources
+
+    def test_prelude_plan_one_python_pass_no_html_exchange(self, spark, tmp_path):
+        """The keys query holds the prelude's only Python node (no
+        ArrowEvalPython) and never reads html; the fetched query runs
+        no Python at all, and none of its exchanges carries html."""
+        from gleaner_spark.sources import corpus
+        from gleaner_spark.streaming.incremental import (
+            _attributed_keys, fetch_microbatch,
+        )
+
+        df, sources = self._drop(spark, str(tmp_path / "drop"))
+        keys = _attributed_keys(df, sources, corpus.build_robots())
+        nodes = _plan_nodes(keys)
+        assert [x.nodeName() for x in nodes if _is_python_node(x)] == ["MapInArrow"]
+        assert all("html" not in _output_names(x) for x in nodes)
+
+        fetched, _ = fetch_microbatch(df, sources, corpus.build_robots())
+        nodes = _plan_nodes(fetched)
+        assert not [x.nodeName() for x in nodes if _is_python_node(x)]
+        exchanges = [x for x in nodes if "Exchange" in x.nodeName()]
+        assert exchanges
+        for x in exchanges:
+            assert "html" not in _output_names(x), x.toString()
+
+    def test_prelude_counts_match_per_row_source_join(self, spark, tmp_lake, tmp_path):
+        """fetched / documents / prov counts equal the per-row
+        semantics of the source join it replaced: one row per (page
+        row, owning source) — shared domain 2x, the duplicated row 2x
+        (one stored document, two prov records) — while the NULL
+        warc_ts row (the crawl-order rank's equi-join drops it), the
+        unkeyable URL and the robots-disallowed one yield nothing."""
+        from gleaner_spark.plans.lake import Lake
+        from gleaner_spark.sources import corpus
+        from gleaner_spark.streaming.incremental import (
+            fetch_microbatch, incremental_harvest,
+        )
+
+        drop = str(tmp_path / "drop")
+        df, sources = self._drop(spark, drop)
+        fetched, n = fetch_microbatch(df, sources, corpus.build_robots())
+        got = sorted((r["source_name"], r["url"]) for r in
+                     fetched.select("source_name", "url").collect())
+        # distinct (source, url, warc_ts) keys, the NULL-ts one included
+        assert n == 5
+        assert got == sorted([
+            ("src0", corpus.url_for(0)), ("srcX", corpus.url_for(0)),
+            ("src1", corpus.url_for(1)), ("src1", corpus.url_for(1)),
+            ("src3", "https://geo3.example.org/items/a{b}"),
+        ])
+
+        lake = Lake(tmp_lake)
+        q = incremental_harvest(spark, lake, sources, drop,
+                                str(tmp_path / "ckpt"),
+                                robots_bodies=corpus.build_robots())
+        q.awaitTermination(120)
+        assert q.exception() is None
+        docs = lake.table("documents").read(spark)
+        assert sorted(r["source_name"] for r in docs.collect()) == [
+            "src0", "src1", "src3", "srcX"]
+        prov = lake.table("prov").read(spark)
+        assert sorted((r["source_name"], r["url"]) for r in prov.collect()) == got
+
+
 class TestJvmHashCompletion:
     def test_jvm_hashes_byte_equal_to_reference_python(self, spark):
         """The deferred JVM-side F.sha1/F.sha2 completion must match
@@ -1052,6 +1190,32 @@ class TestScalableScheduling:
         assert by_seq[1]["scheduled_offset_ms"] == 50  # delay pacing intact
 
 
+def _robots_filter_udf(robots_by_host: dict[str, str]):
+    """Unfused robots evaluator, the oracle for the fused frontier
+    parse: one vectorized UDF over (url, host) columns, parsed groups
+    cached per executor."""
+    from pyspark.sql import types as T
+
+    from gleaner_spark.core import robots as rb
+    from gleaner_spark.core.extract import EARTHCUBE_AGENT
+
+    _cache: dict = {}
+
+    @F.pandas_udf(T.BooleanType())
+    def allowed(urls: pd.Series, hosts: pd.Series) -> pd.Series:
+        out = []
+        for url, host in zip(urls, hosts):
+            grp = _cache.get(host, False)
+            if grp is False:
+                body = robots_by_host.get(host)
+                grp = rb.parse_robots_txt(body).find_group(EARTHCUBE_AGENT) if body else None
+                _cache[host] = grp
+            out.append(True if grp is None else grp.test(url))
+        return pd.Series(out)
+
+    return allowed
+
+
 class TestFusedFrontier:
     def test_fused_build_matches_unfused_chain(self, spark):
         """build_frontier's fused parse+normalize+robots+rank stage is
@@ -1063,8 +1227,7 @@ class TestFusedFrontier:
 
         from gleaner_spark.core.extract import EARTHCUBE_AGENT  # noqa: F401
         from gleaner_spark.operators.frontier import (
-            _robots_filter_udf, build_frontier, resolve_sitemap_docs,
-            sitemap_entries_df,
+            build_frontier, resolve_sitemap_docs, sitemap_entries_df,
         )
         from gleaner_spark.sources.config import Source
 

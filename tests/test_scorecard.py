@@ -160,7 +160,9 @@ def test_streaming_index_replay_guard(spark, tmp_lake, tmp_path):
 
     from gleaner_spark.plans.lake import Lake
     from gleaner_spark.sources import corpus
-    from gleaner_spark.streaming.incremental import incremental_harvest
+    from gleaner_spark.streaming.incremental import (
+        _checkpoint_lineage, incremental_harvest,
+    )
 
     stream_dir = tempfile.mkdtemp(prefix="gleaner-replay-")
     ckpt = tempfile.mkdtemp(prefix="gleaner-replay-ckpt-")
@@ -174,7 +176,7 @@ def test_streaming_index_replay_guard(spark, tmp_lake, tmp_path):
     assert idx.read(spark).count() == 20
     # inject "the replayed batch's append already committed": the next
     # batch on THIS checkpoint will be batch 1 — pre-publish its run_id
-    h = hashlib.sha1(ckpt.encode()).hexdigest()[:8]
+    h = hashlib.sha1(_checkpoint_lineage(ckpt).encode()).hexdigest()[:8]
     from datetime import datetime
     idx.append_local(
         [{"surt_key": "org,marker)/x", "ts": datetime(2024, 1, 1),
@@ -218,3 +220,27 @@ def test_cli_recrawl_selected_reports_true_cut_size(spark, tmp_path, capsys):
     summary = _json.loads(lines[-1])
     assert summary["selected"] == 5
     assert summary["known_urls"] == 12
+
+
+def test_streaming_index_recreated_checkpoint_appends(spark, tmp_lake, tmp_path):
+    """A checkpoint wiped and recreated at the SAME path is a new
+    lineage: batch ids restart at 0, but the replay guard must not
+    mistake its batches for the old lineage's and drop their
+    captures."""
+    import shutil
+
+    from gleaner_spark.plans.lake import Lake
+    from gleaner_spark.sources import corpus
+    from gleaner_spark.streaming.incremental import incremental_harvest
+
+    ckpt = str(tmp_path / "ckpt")
+    lake = Lake(tmp_lake)
+    for k, n in enumerate((20, 12)):
+        drops = str(tmp_path / f"drops-{k}")
+        corpus.build_pages(spark, n, partitions=1).write.parquet(drops)
+        shutil.rmtree(ckpt, ignore_errors=True)
+        q = incremental_harvest(spark, lake, corpus.build_sources(),
+                                drops, ckpt, maintain_index=True)
+        q.awaitTermination(120)
+        assert q.exception() is None
+    assert lake.table("url_index").read(spark).count() == 32
